@@ -29,10 +29,9 @@ import org.apache.spark.sql.SparkSession
   * all 103 in 37.7 s) must be distinguishable from a plan regression
   * inside the artifact itself.
   *
-  * Config mirrors the 100 TB posture scaled to one node: AQE on (runtime
-  * shuffle coalescing + skew-join splitting), shuffle partitions = cores
-  * (not the 200 default), UTC session. A throwaway action first absorbs
-  * session/codegen warm-up so query 1 isn't billed JVM startup.
+  * The session is [[Session]]'s profile, the one Verify checks plans
+  * under. A throwaway action first absorbs session/codegen warm-up so
+  * query 1 isn't billed JVM startup.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -41,69 +40,8 @@ object Bench {
     // exists to keep parseable — pin the whole process to ROOT
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.extensions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE is the 100 TB runtime lever (skew-join splitting, partition
-      // coalescing) and stays ON in the engine's production session
-      // builders; the BENCH session turns it OFF because at gate scale
-      // (32 fixed partitions, no real skew) its per-stage replanning is
-      // the dominant cost of every small query — measured 32.5s → 25.6s
-      // across 106 queries on identical logical plans, trivial-scan floor
-      // 0.34s → 0.12s, with no query slower by more than 0.14s. Re-measure
-      // with AQE via SPARK_GRAFT_EXTRA_CONFS when that tradeoff shifts.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // When AQE is re-enabled: coalesce to the FEWEST partitions that
-      // respect the advisory size, not to max parallelism — the gate
-      // inputs are small enough that task scheduling dominates.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Join preference stays at the Spark default (sort-merge). A session-
-      // global preferSortMergeJoin=false was tried in the r10→r11 interim:
-      // full-run A/B at sf0.1 showed it is NET NEGATIVE here — it wins on a
-      // few big-big joins but loses more broadly (j2_star_agg +0.7 s,
-      // k_core +1.0 s, anti/full-outer joins +0.5 s each; graph loops
-      // within noise). Joins where SHJ is measurably better carry an
-      // explicit shuffle_hash hint at the operator (pageRank et al.).
-      // Single-node bench: shuffle blocks never cross a wire, so compression
-      // is pure CPU overhead on the many tiny gate shuffles.
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.locality.wait", "0")
-      // 100+ queries × several codegen stages exceed the 100-entry default —
-      // cache thrash forces janino recompiles on every rerun (measured: 6×
-      // slowdowns on the HOF-heavy vector/minhash queries).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // clearCache() below reclaims persist()ed frames but NOT
-      // localCheckpoint blocks — those free only when the ContextCleaner
-      // sees the RDD object garbage-collected on the driver, and its
-      // safety-net GC defaults to every 30 min (longer than this run).
-      // Hundreds of dead checkpoint RDDs from the graph/dedup/ER round
-      // loops otherwise pile up on the heap and make late-query timings a
-      // function of driver memory (r10: the 48g/96g sf1 runs disagreed
-      // ~10× on late gates). The cleanup lives in the explicit
-      // OFF-TIMING-PATH System.gc() at the canary cadence below (every 20
-      // queries ≈ every 1–2 min of wall). A periodicGC.interval=1min was
-      // tried in the r10→r11 interim and REVERTED: its full GCs land
-      // MID-QUERY and cost ~8–10 s across the sf0.1 run (q_x_stream_hourly
-      // alone paid ~5 s — a GC stall inside awaitTermination stretches
-      // every micro-batch). Fixture serving indexes stay strongly
-      // referenced in the query registries, so the train-once/probe-many
-      // shape is untouched.
-      .config("spark.ui.enabled", "false")
-    // Dev knob for conf A/B runs: SPARK_GRAFT_EXTRA_CONFS="k=v;k=v".
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").toSeq
-      .flatMap(_.split(";").toSeq).filter(_.contains("="))
-      .foldLeft(builder) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      .getOrCreate()
+    val spark = Session.build("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM/codegen warm-up
 
@@ -152,8 +90,13 @@ object Bench {
       val sec = if (ok) all.map(_._1).min else -1.0
       println(f"""{"bench_query":"${q.name}","sec":$sec%.4f,"ok":$ok}""")
       if ((i + 1) % 20 == 0) {
-        // Off the timing path: collect dead localCheckpoint RDDs (see the
-        // ContextCleaner note on the builder above) before the canary.
+        // Off the timing path, before the canary: clearCache() does not
+        // reclaim localCheckpoint blocks, which free only once the
+        // ContextCleaner sees their RDDs collected in this JVM (its own
+        // safety-net GC runs every 30 min). Hundreds of dead checkpoint RDDs
+        // from the graph/dedup/ER loops otherwise make late-query timings a
+        // function of heap size. A periodicGC.interval=1min lands its
+        // full GCs mid-query instead.
         System.gc()
         canarySamples += ((i + 1, timeOnce(canaryFn)._1))
       }

@@ -62,7 +62,7 @@ object RewriteDotProduct extends Rule[LogicalPlan] {
 
 /** Session extensions: SQL-surface the custom expression (`dot_long`) and
   * install [[RewriteDotProduct]]. Activate with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * `withExtensions(new GraftExtensions)` (as [[graft.Session]] does) or
   * `spark.sql.extensions=graft.extensions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

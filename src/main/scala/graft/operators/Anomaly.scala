@@ -203,7 +203,7 @@ object Anomaly {
     * The single-ordered-window oracle form is the 1-partition
     * anti-pattern this shape exists to avoid. The per-value frame stays
     * persisted because the returned lazy plan reads it twice; release
-    * via [[CacheGuard.releaseAll]] (distinct-value-sized — the
+    * via [[CacheGuard.scoped]] (distinct-value-sized — the
     * Trend/TextDedup cache-lifetime contract). */
   def ksDrift(ref: DataFrame, cur: DataFrame, valueCol: String,
       bucketBits: Int = 20): DataFrame = {

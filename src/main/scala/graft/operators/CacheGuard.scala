@@ -1,54 +1,62 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Reachable cleanup handle for operator-internal persisted frames whose
   * lifetime must ESCAPE the building function: the returned lazy plan reads
   * them more than once, so there is no safe in-function unpersist point,
   * and the caller holds no reference to unpersist either. Every such site
-  * registers here at persist time ([[PersistTrackedOps.persistTracked]]);
-  * a long-lived session calls [[releaseAll]] between batches/queries to
-  * drop the accumulated MEMORY_AND_DISK entries — the concrete contract
-  * behind every "caller owns unpersist" scaladoc in this package. (A bench
-  * or notebook can equivalently `spark.catalog.clearCache()`; releaseAll
-  * is narrower — it touches only graft-tracked frames, never the user's
-  * own caches or catalog tables.)
+  * registers here at persist time ([[PersistTrackedOps.persistTracked]]).
   *
-  * Registration holds a strong reference until release, which is the
-  * point: the frame must stay listed even after the caller drops the plan.
+  * A caller that consumes those plans eagerly (a pipeline batch that lands
+  * every result in the catalog) wraps the work in [[scoped]], which drops
+  * exactly the frames registered during it — never a frame persisted
+  * before, on another thread, or by someone else's still-live plan on a
+  * shared session. Frames registered outside any scope belong to the
+  * session (`spark.catalog.clearCache()` or teardown), the concrete
+  * contract behind every "caller owns unpersist" scaladoc in this package.
+  *
   * Frames a function unpersists itself (try/finally loops) do NOT register.
   */
 object CacheGuard {
-  private val tracked =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      java.util.Queue[DataFrame]]()
+
+  /** The frames registered on one thread while this scope was the
+    * innermost open one. Thread-confined: only its thread adds to it. */
+  final class Scope private[CacheGuard] () {
+    private[CacheGuard] val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** Leave the scope and unpersist its frames (blocking = false; the block
+      * drop proceeds asynchronously). Returns how many were released;
+      * idempotent — a second close finds nothing. */
+    def close(): Int = {
+      open.set(open.get.filterNot(_ eq this))
+      frames.foreach(_.unpersist(false))
+      val n = frames.size
+      frames.clear()
+      n
+    }
+  }
+
+  // this thread's open scopes, innermost first
+  private val open = ThreadLocal.withInitial[List[Scope]](() => Nil)
 
   private[graft] def track(df: DataFrame): DataFrame = {
-    tracked.keySet.removeIf(_.sparkContext.isStopped)
-    tracked.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(df)
+    open.get.headOption.foreach(_.frames += df)
     df
   }
 
-  /** How many frames are currently tracked for `spark` (spec probe). */
-  private[graft] def trackedCount(spark: SparkSession): Int = {
-    val q = tracked.get(spark)
-    if (q == null) 0 else q.size
+  /** Open a scope on this thread; [[Scope.close]] ends it. */
+  private[graft] def openScope(): Scope = {
+    val s = new Scope
+    open.set(s :: open.get)
+    s
   }
 
-  /** Unpersist every graft-tracked frame of `spark` (blocking = false; the
-    * block drop proceeds asynchronously). Returns how many were released.
-    * Idempotent: frames already unpersisted release as no-ops. */
-  def releaseAll(spark: SparkSession): Int = {
-    val q = tracked.remove(spark)
-    if (q == null) 0
-    else {
-      var n = 0
-      var df = q.poll()
-      while (df != null) { df.unpersist(false); n += 1; df = q.poll() }
-      n
-    }
+  /** Run `body`, then unpersist the frames registered during it. */
+  def scoped[T](body: => T): T = {
+    val s = openScope()
+    try body finally s.close(): Unit
   }
 
   implicit class PersistTrackedOps(private val df: DataFrame) extends AnyVal {

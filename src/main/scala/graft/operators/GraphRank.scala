@@ -335,7 +335,7 @@ object GraphRank {
     // eagerly materialize the laid-out frame (cheap: re-reads u0's cached
     // blocks through one exchange) so the scan cache can be released
     // in-function instead of doubling the edge-sized footprint until
-    // CacheGuard.releaseAll — mirrors the pageRank/hits path
+    // the enclosing CacheGuard.scoped ends — mirrors the pageRank/hits path
     und.count()
     u0.unpersist(false)
     var labels = und.select(col("src").as("n")).distinct()
@@ -760,7 +760,7 @@ object GraphRank {
   def triangleStats(edges: DataFrame): DataFrame = {
     // the edge list feeds five subtrees (both wedge sides, the closing
     // probe, the node census, the edge count) — persist it once;
-    // released via CacheGuard.releaseAll (edge-sized, spills)
+    // released via CacheGuard.scoped (edge-sized, spills)
     val e = edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .persistTracked()
     // the wedge frame is the big side (Σ deg(b)² rows): when a measured
@@ -827,7 +827,7 @@ object GraphRank {
     * oracle replays the identical cap, so the gate is exact; the uncapped
     * [[neighborJaccard]] remains the small-graph form. The und/deg/centers
     * frames stay persisted because the returned lazy plan reads each more
-    * than once; release via [[CacheGuard.releaseAll]] (edge-/node-sized —
+    * than once; release via [[CacheGuard.scoped]] (edge-/node-sized —
     * the Trend/TextDedup cache-lifetime contract). */
   def neighborJaccardCapped(edges: DataFrame, maxDeg: Long,
       minCommon: Long = 1L): DataFrame = {

@@ -243,7 +243,7 @@ object NgramLm {
     * [[graft.operators.Trend.spearman]] device); past the cutoff they
     * fall back to token-keyed shuffles. The returned plan's cached input
     * (pair-vocab-sized, not corpus-sized) releases via
-    * [[CacheGuard.releaseAll]]. */
+    * [[CacheGuard.scoped]]. */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

@@ -163,7 +163,7 @@ object TextIndex {
     * shape), a 1-row N broadcast, and a per-DOC window — partitions are
     * document-sized, never corpus-sized. NOTE the measured probe makes
     * plan construction eager (two jobs); the returned plan's cached
-    * inputs release via [[CacheGuard.releaseAll]].
+    * inputs release via [[CacheGuard.scoped]].
     *
     * `prebuilt`: a postings frame already derived from `docs` (the shared
     * serving index — same slot as ProductQuantizer's `encoded`); when

@@ -282,7 +282,7 @@ object Trend {
     * cutoff is a MEASURED count, so building the plan runs two Spark jobs
     * (one per rank map) before returning. The rank-map and base frames
     * stay persisted because the returned lazy plan reads them; release
-    * via [[CacheGuard.releaseAll]] (or session teardown) — same
+    * via [[CacheGuard.scoped]] (or session teardown) — same
     * cache-lifetime contract as TextDedup's persisted fingerprints. The row-count cutoff is a
     * deliberate simplification: rank-map rows are two fixed-width longs,
     * so rows × 16 B tracks bytes within a constant. */

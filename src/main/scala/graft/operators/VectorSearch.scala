@@ -472,7 +472,7 @@ object VectorSearch {
       dim: Int = -1): DataFrame = {
     // both sides of the self-join read the same quantize + numPlanes-dot
     // bucketing — persist it once instead of re-deriving per side
-    // (released via CacheGuard.releaseAll; corpus-row-sized, spills to disk)
+    // (released via CacheGuard.scoped; corpus-row-sized, spills to disk)
     val e = lshBuckets(emb, numPlanes, if (dim > 0) dim else probeDim(emb))
       .persistTracked()
     val a = e.select(col("vec_id").as("id1"), col("q").as("q1"), col("nn").as("n1"), col("bucket"))

@@ -17,7 +17,7 @@ import graft.model.{Schemas, Scd2Spec}
   *
   * Note the as-is behavior: the reference re-versions EVERY source row each
   * run, changed or not — there is no change detection (SURVEY.md §7.5.1).
-  * [[run]] reproduces that; [[runChangedOnly]] is the opt-in hash-diff
+  * [[run]] reproduces that; [[runChangedOnly]] is the opt-in change-only
   * improvement and is never the default.
   *
   * Scale notes:
@@ -79,18 +79,19 @@ object Scd2Upsert {
     else
       SurrogateKeys.assign(staged, spec.surrogateKey, offset, spec.trackedColumns: _*)
 
-  /** Opt-in improvement (SURVEY.md §7.5.1): only rows whose tracked-attribute
-    * hash differs from the current dim version are re-versioned. */
+  /** Opt-in improvement (SURVEY.md §7.5.1): only staged rows that differ
+    * from their key's current dim version in some tracked attribute are
+    * re-versioned. The compare is per column and null-safe, so a NULL that
+    * turns into '' or moves to another column is a change. */
   def runChangedOnly(source: DataFrame, dim: DataFrame, spec: Scd2Spec, runDate: Date): DataFrame = {
-    val hashCols = spec.trackedColumns.map(c => col(c).cast("string"))
-    def withHash(df: DataFrame) = df.withColumn("__h", sha2(concat_ws("", hashCols: _*), 256))
-    val currentHashes = withHash(dim.filter(col(spec.endDateCol) === lit(Schemas.HighDate)))
-      .select(col(spec.businessKey), col("__h"))
-    val curRenamed = currentHashes.withColumnRenamed("__h", "__cur")
-    val changed = withHash(source.select(spec.trackedColumns.map(col): _*).distinct())
-      .join(if (spec.scalableKeys) curRenamed else broadcast(curRenamed), Seq(spec.businessKey), "left")
-      .filter(col("__cur").isNull || col("__cur") =!= col("__h"))
-      .drop("__h", "__cur")
+    val current = dim.filter(col(spec.endDateCol) === lit(Schemas.HighDate))
+      .select(spec.trackedColumns.map(col): _*).as("c")
+    val unchanged = spec.attributes.foldLeft(
+      col(s"s.${spec.businessKey}") === col(s"c.${spec.businessKey}")) { (m, a) =>
+      m && (col(s"s.$a") <=> col(s"c.$a"))
+    }
+    val changed = source.select(spec.trackedColumns.map(col): _*).distinct().as("s")
+      .join(if (spec.scalableKeys) current else broadcast(current), unchanged, "left_anti")
     run(changed, dim, spec, runDate)
   }
 

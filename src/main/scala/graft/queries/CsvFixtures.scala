@@ -1,7 +1,6 @@
 package graft.queries
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Catalog
@@ -29,14 +28,11 @@ import graft.catalog.Catalog
   */
 object CsvFixtures {
 
-  private val roots = new ConcurrentHashMap[(SparkSession, String), String]()
-  private val c5Catalogs = new ConcurrentHashMap[(SparkSession, String), Catalog]()
+  private val roots = new PerSession[String]
+  private val c5Catalogs = new PerSession[Catalog]
 
   /** Directory holding one CSV dataset per reference source table. */
-  def root(s: SparkSession, d: String): String = {
-    roots.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    roots.computeIfAbsent((s, d), { case (spark, dir) => build(spark, dir) })
-  }
+  def root(s: SparkSession, d: String): String = roots(s, d)(build(s, d))
 
   /** One full C5 pipeline run (CSV load+validate ×5 → SCD2 ×3 → dates →
     * fact) into a throwaway catalog, memoized per (session, sfDir): the
@@ -44,13 +40,12 @@ object CsvFixtures {
     * rerun re-versions every row), so audit queries must observe the state
     * after exactly ONE run regardless of how many times the gate/bench
     * invokes them. Verify still exercises the whole runner (first call). */
-  def pipelineCatalog(s: SparkSession, d: String): Catalog = {
-    c5Catalogs.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    c5Catalogs.computeIfAbsent((s, d), { case (spark, dir) =>
-      val fx = root(spark, dir)
-      val cat = new Catalog(spark,
+  def pipelineCatalog(s: SparkSession, d: String): Catalog =
+    c5Catalogs(s, d) {
+      val fx = root(s, d)
+      val cat = new Catalog(s,
         Files.createTempDirectory("graft-c5-catalog").toString)
-      val runner = new graft.run.PipelineRunner(spark, cat)
+      val runner = new graft.run.PipelineRunner(s, cat)
       val runDate = java.sql.Date.valueOf("2024-01-01")
       // Reference workflow order: dims' sources first, fact trigger last
       // (the orderdetails run dispatches populateFact, which needs the three
@@ -58,8 +53,7 @@ object CsvFixtures {
       Seq("customers", "products", "stores", "orders", "orderdetails")
         .foreach(t => runner.run(graft.run.RunConfig(t, s"$fx/$t", runDate)))
       cat
-    })
-  }
+    }
 
   /** customer → customers(customerid, firstname, lastname, email, address,
     * city, state, zipcode). Column ORDER matches the TableSpec: CSV with an

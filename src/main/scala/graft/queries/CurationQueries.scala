@@ -22,14 +22,11 @@ object CurationQueries {
     * one fit (train once, score many, like the k-means coarse quantizer),
     * and the model tables persist so scoring's three references to them
     * (labels ×2, tokenProbs) don't re-execute the training lineage. */
-  private val nbModels = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), graft.operators.NaiveBayes.NbModel]()
+  private val nbModels = new PerSession[graft.operators.NaiveBayes.NbModel]
 
   private def nbModel(s: org.apache.spark.sql.SparkSession, d: String)
       : graft.operators.NaiveBayes.NbModel = {
-    nbModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    val m = nbModels.computeIfAbsent((s, d), _ =>
-      graft.operators.NaiveBayes.train(
+    val m = nbModels(s, d)(graft.operators.NaiveBayes.train(
         docs(s, d).filter(col("doc_id") % 2 === 0), "lang"))
     // re-persist on every access: the bench session clearCache()s between
     // queries, and persist() is idempotent when the frame is still cached
@@ -42,28 +39,22 @@ object CurationQueries {
     * to replay the token explode + model joins per query; the r8 verdict
     * flagged q_x_nb_margin_bins paying ~1.5 s to re-derive what its
     * siblings already had). */
-  private val nbScoreFrames = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val nbScoreFrames = new PerSession[org.apache.spark.sql.DataFrame]
 
   private def nbScores(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    nbScoreFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    val sc = nbScoreFrames.computeIfAbsent((s, d), _ =>
-      graft.operators.NaiveBayes.scores(docs(s, d), nbModel(s, d)))
+    val sc = nbScoreFrames(s, d)(graft.operators.NaiveBayes.scores(docs(s, d), nbModel(s, d)))
     sc.persist() // idempotent; re-persist because bench clearCache()s
     sc
   }
 
   /** Shared persisted confusion frame (K²-sized) — the confusion and
     * metrics gates consume the same classify run. */
-  private val nbConfusions = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val nbConfusions = new PerSession[org.apache.spark.sql.DataFrame]
 
   private def nbConfusion(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    nbConfusions.keySet.removeIf(_._1.sparkContext.isStopped)
-    val c = nbConfusions.computeIfAbsent((s, d), _ =>
-      graft.operators.NaiveBayes.confusionFromScores(nbScores(s, d),
+    val c = nbConfusions(s, d)(graft.operators.NaiveBayes.confusionFromScores(nbScores(s, d),
         docs(s, d).select(col("doc_id"), col("lang").as("gold"))))
     c.persist()
     c
@@ -173,7 +164,7 @@ object CurationQueries {
 
   /** Per-(session, sfDir) catalog root for the stored-LM gate. */
   private val lmRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   lazy val all: Seq[QueryDef] = Seq(
 

@@ -22,8 +22,7 @@ object EventQueries {
   /** Per-(session, sfDir) chunked parquet source for the streaming gate
     * (write-once, the stored-stream-source shape). */
   private val streamSrcRoots =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   /** Memory-sink query names must be unique per run (the bench executes
     * the gate several times in one session). */

@@ -33,7 +33,7 @@ object ParityQueries {
 
   /** Per-(session, sfDir) catalog root for the S2/F12 catalog-surface gates. */
   private val catalogRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Two-version fixture shared by the CDC and time-travel gates: v0 holds
     * orders with o_orderkey%3 ∈ {0,2}, v1 (current) replaces it with
@@ -53,20 +53,20 @@ object ParityQueries {
 
   /** Per-(session, sfDir) export root for the JSONL sink gate. */
   private val jsonlRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) root for the copy-on-write DELETE gate. */
   private val deleteRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) root for the MERGE upsert gate. */
   private val mergeRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) root for the keyed-CDC gate (its fixture needs
     * UPDATES between versions, which the shared cdcCatalog lacks). */
   private val cdcKeyedRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   lazy val all: Seq[QueryDef] = Seq(
 

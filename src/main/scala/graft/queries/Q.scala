@@ -28,17 +28,12 @@ object Q {
     * file listing + schema read otherwise repeats for every query (43
     * queries × 2 bench runs — a measurable slice of the fixed per-query
     * overhead). Plans stay lazy; nothing is materialized here. */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val tables = new PerSession[DataFrame]
 
-  /** Read one of the driver-generated parquet tables (TESTDATA.md). Entries
-    * for stopped sessions are dropped on access so the cache cannot retain
-    * DataFrames of dead sessions in a long-lived process (the bench/verify
-    * mains are single-session, so this is a one-pass no-op there). */
+  /** Read one of the generated parquet test tables (TESTDATA.md). */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    tableCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    tableCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      { case (s, p) => s.read.parquet(p) })
+    val path = s"$dir/$name.parquet"
+    tables(spark, path)(spark.read.parquet(path))
   }
 
   /** The `events` fixture has shipped with several `ts` precisions over time
@@ -63,15 +58,9 @@ object Q {
   }
 
   /** Per-(session, sfDir) temp directory for stored-index / stored-layout
-    * gates (write-once-read-many, like a real index); stopped-session
-    * entries evicted on access — one implementation for every such cache
-    * instead of a hand-rolled copy per query family. */
-  def tempRoot(cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String],
-      s: SparkSession, d: String, prefix: String): String = {
-    cache.keySet.removeIf(_._1.sparkContext.isStopped)
-    cache.computeIfAbsent((s, d),
-      _ => java.nio.file.Files.createTempDirectory(prefix).toString)
-  }
+    * gates (write-once-read-many, like a real index). */
+  def tempRoot(roots: PerSession[String], s: SparkSession, d: String, prefix: String): String =
+    roots(s, d)(java.nio.file.Files.createTempDirectory(prefix).toString)
 
   /** Exact integer cents from a 2-decimal double (BASELINE probe: prices are
     * 2-decimal within 1e-9, so round-then-cast is tie-free and identical in

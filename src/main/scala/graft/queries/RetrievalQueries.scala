@@ -52,13 +52,11 @@ object RetrievalQueries {
     * flagged q_x_search_rrf paying ~1 s to re-derive what search_hybrid
     * had just built). The stored-index gates (indexed/incremental) are
     * deliberately NOT routed through it: they prove the catalog path. */
-  private val postingsFrames = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
+  private val postingsFrames = new PerSession[org.apache.spark.sql.DataFrame]
 
   private def sharedPostings(s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-    postingsFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    val p = postingsFrames.computeIfAbsent((s, d), _ =>
+    val p = postingsFrames(s, d)(
       graft.operators.TextIndex.postings(t(s, d, "documents"), "doc_id", "text"))
     p.persist() // idempotent; re-persist because bench clearCache()s
     p
@@ -67,11 +65,11 @@ object RetrievalQueries {
   /** Per-(session, sfDir) roots for the stored postings indexes —
     * write-once-read-many, like the IVF / LSH band indexes. */
   private val textIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) roots for the stored POSITIONAL index. */
   private val posIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   lazy val all: Seq[QueryDef] = Seq(
 

@@ -43,11 +43,11 @@ object TextQueries {
     * write-once-read-many, like a real index (bench/verify mains are
     * short-lived; see the Q.tableCache lifetime note). */
   private val bandIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) roots for the q_x_partitioned_scan layout. */
   private val partitionedRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   /** Oracle for the batch-vs-corpus incremental dedups (shared by the
     * recompute-the-corpus and the persisted-index variants — the index must
@@ -120,18 +120,15 @@ object TextQueries {
   /** Per-(session, sfDir) learned BPE merges — train-once-probe-many, same
     * pattern as VectorQueries' kmeansModels: q_x_bpe_merges and
     * q_x_bpe_encode share one fit instead of re-learning per invocation. */
-  private val bpeMerges = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[graft.operators.BpeVocab.Merge]]()
+  private val bpeMerges = new PerSession[Seq[graft.operators.BpeVocab.Merge]]
 
   private def learnedMerges(s: org.apache.spark.sql.SparkSession, d: String) = {
-    bpeMerges.keySet.removeIf(_._1.sparkContext.isStopped)
-    bpeMerges.computeIfAbsent((s, d),
-      _ => graft.operators.BpeVocab.learn(t(s, d, "documents"), 3))
+    bpeMerges(s, d)(graft.operators.BpeVocab.learn(t(s, d, "documents"), 3))
   }
 
   /** Per-(session, sfDir) roots for the q_x_bpe_encode_stored merge table. */
   private val bpeMergeRoots =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
+    new PerSession[String]
 
   /** Oracle shared by the in-session and stored-merges encode gates — a
     * merge table round-tripped through the catalog must encode identically. */

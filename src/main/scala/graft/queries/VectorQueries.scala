@@ -31,18 +31,16 @@ object VectorQueries {
   /** Per-(session, sfDir) roots for the q_x_ann_index stored IVF index —
     * write-once-read-many, like a real retrieval index. */
   private val ivfIndexRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) fitted k-means model — trained once, probed many,
     * like a production coarse quantizer (the first gate touching it pays
     * the fit; q_x_kmeans and q_x_ann_kmeans share it). */
   private val kmeansModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.KMeans.Model]()
+    new PerSession[graft.operators.KMeans.Model]
 
   private def kmeansModel(s: SparkSession, d: String): graft.operators.KMeans.Model = {
-    kmeansModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    kmeansModels.computeIfAbsent((s, d),
-      _ => graft.operators.KMeans.fit(t(s, d, "embeddings"), k = 8, iters = 2))
+    kmeansModels(s, d)(graft.operators.KMeans.fit(t(s, d, "embeddings"), k = 8, iters = 2))
   }
 
   /** Oracle shared by the inline and stored-index ANN probes (vec_id < 20
@@ -170,17 +168,16 @@ object VectorQueries {
 
   /** Per-(session, sfDir) roots for the q_x_ann_kmeans_stored model table. */
   private val kmeansModelRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) kmeans‖-seeded model (fitParallel defaults:
     * k=8, iters=2, rounds=2) — the production init, oracle-gated. */
   private val kmeansParallelModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.KMeans.Model]()
+    new PerSession[graft.operators.KMeans.Model]
 
   private def kmeansParallelModel(s: SparkSession, d: String): graft.operators.KMeans.Model = {
-    kmeansParallelModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    kmeansParallelModels.computeIfAbsent((s, d),
-      _ => graft.operators.KMeans.fitParallel(t(s, d, "embeddings"), k = 8, iters = 2, rounds = 2))
+    kmeansParallelModels(s, d)(
+      graft.operators.KMeans.fitParallel(t(s, d, "embeddings"), k = 8, iters = 2, rounds = 2))
   }
 
   /** Full SQL replay of [[graft.operators.KMeans.fitParallel]] — the
@@ -297,18 +294,16 @@ object VectorQueries {
   /** Per-(session, sfDir) fitted PQ codebooks (m=4 × 16-dim subspaces,
     * ksub=8, iters=2) — trained once, probed by both PQ gates. */
   private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.ProductQuantizer.PQModel]()
+    new PerSession[graft.operators.ProductQuantizer.PQModel]
 
   private def pqModel(s: SparkSession, d: String): graft.operators.ProductQuantizer.PQModel = {
-    pqModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqModels.computeIfAbsent((s, d),
-      _ => graft.operators.ProductQuantizer.fit(
+    pqModels(s, d)(graft.operators.ProductQuantizer.fit(
         t(s, d, "embeddings"), m = 4, ksub = 8, iters = 2, dim = 64))
   }
 
   /** Per-(session, sfDir) roots for the q_x_ann_pq_stored codes + model. */
   private val pqStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+    new PerSession[String]
 
   /** Per-(session, sfDir) MATERIALIZED code frames — the index tables of a
     * serving deployment, shared across the PQ/IVF-PQ probe gates the same
@@ -317,13 +312,11 @@ object VectorQueries {
     * re-analyze) run once per session, every probe reads the
     * localCheckpointed codes. */
   private val codeFrames =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      org.apache.spark.sql.DataFrame]()
+    new PerSession[org.apache.spark.sql.DataFrame]
 
   private def codeFrame(s: SparkSession, d: String, kind: String)(
       build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    codeFrames.keySet.removeIf(_._1.sparkContext.isStopped)
-    codeFrames.computeIfAbsent((s, d, kind), _ => build.localCheckpoint())
+    codeFrames(s, s"$d#$kind")(build.localCheckpoint())
   }
 
   private def pqCodes(s: SparkSession, d: String) =
@@ -513,12 +506,10 @@ object VectorQueries {
   /** Per-(session, sfDir) residual PQ codebooks (trained on coarse-model
     * residuals; shares the cached coarse model). */
   private val pqResidualModels =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.operators.ProductQuantizer.PQModel]()
+    new PerSession[graft.operators.ProductQuantizer.PQModel]
 
   private def pqResidualModel(s: SparkSession, d: String): graft.operators.ProductQuantizer.PQModel = {
-    pqResidualModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqResidualModels.computeIfAbsent((s, d),
-      _ => graft.operators.ProductQuantizer.fitResidual(
+    pqResidualModels(s, d)(graft.operators.ProductQuantizer.fitResidual(
         t(s, d, "embeddings"), kmeansModel(s, d), m = 4, ksub = 8, iters = 2, dim = 64))
   }
 
@@ -569,16 +560,14 @@ object VectorQueries {
 
   /** Per-(session, sfDir) fitted PCA model (gram moments + dominant
     * direction): the three PCA gates share ONE corpus scan + power fit. */
-  private val pcaModels = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (graft.operators.Pca.GramStats, Array[Long])]()
+  private val pcaModels = new PerSession[(graft.operators.Pca.GramStats, Array[Long])]
 
   private def pcaModel(s: SparkSession, d: String)
       : (graft.operators.Pca.GramStats, Array[Long]) = {
-    pcaModels.keySet.removeIf(_._1.sparkContext.isStopped)
-    pcaModels.computeIfAbsent((s, d), _ => {
+    pcaModels(s, d) {
       val g = graft.operators.Pca.gramStats(t(s, d, "embeddings"))
       (g, graft.operators.Pca.principalDirection(graft.operators.Pca.covNumerator(g)))
-    })
+    }
   }
 
   /** Shared oracle CTEs: exact-integer moments (BIGINT gram — products stay

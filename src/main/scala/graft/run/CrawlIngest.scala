@@ -58,13 +58,12 @@ final class CrawlIngest(spark: SparkSession, catalog: Catalog,
 
   /** Ingest one JSONL batch file/directory. Returns per-stage counts.
     * All outputs are catalog-written (eager) and the summary is plain
-    * values, so the finally can release every operator-internal frame
-    * that registered with [[graft.operators.CacheGuard]] during the batch
-    * (the dedup kernels persist shingle/fingerprint frames the returned
-    * plans read — per-batch lifetime, not session lifetime). */
-  def ingest(jsonlPath: String, schema: StructType): CrawlIngestSummary = try {
-    ingestImpl(jsonlPath, schema)
-  } finally graft.operators.CacheGuard.releaseAll(spark): Unit
+    * values, so the batch's scope releases the operator-internal frames
+    * that registered with [[graft.operators.CacheGuard]] during it (the
+    * dedup kernels persist shingle/fingerprint frames the returned plans
+    * read — per-batch lifetime, not session lifetime). */
+  def ingest(jsonlPath: String, schema: StructType): CrawlIngestSummary =
+    graft.operators.CacheGuard.scoped(ingestImpl(jsonlPath, schema))
 
   private def ingestImpl(jsonlPath: String, schema: StructType): CrawlIngestSummary = {
     val (clean, quarantine) = Sources.jsonlWithQuarantine(spark, jsonlPath, schema)

@@ -39,11 +39,8 @@ final class PipelineRunner(spark: SparkSession, catalog: Catalog,
 
   /** One workflow run for one table: C1 always; then C2 or C3 by dispatch.
     * Every result lands in the catalog (eager parquet writes), so nothing
-    * lazy escapes the run — the finally releases whatever operator-internal
-    * frames registered with [[graft.operators.CacheGuard]] during the run,
-    * keeping a long-lived runner session's cache footprint per-run, not
-    * cumulative. */
-  def run(cfg: RunConfig): Unit = try {
+    * lazy escapes the run. */
+  def run(cfg: RunConfig): Unit = {
     val table = cfg.tableName.toLowerCase   // Redshift lower-casing, F12
     val spec = Schemas.sourceTables.getOrElse(table,
       throw new IllegalArgumentException(s"Invalid table name: $table"))
@@ -58,7 +55,7 @@ final class PipelineRunner(spark: SparkSession, catalog: Catalog,
       case "orderdetails" => populateFact()
       case _ => () // orders: load+validate only (reference skip branches)
     }
-  } finally graft.operators.CacheGuard.releaseAll(spark): Unit
+  }
 
   /** C2 for one dimension-backed source table. */
   def upsertDim(table: String, runDate: Date): Unit = {

@@ -423,6 +423,14 @@ class CatalogSpec extends SparkSpec {
     intercept[IllegalArgumentException](cat.diffVersions("t", 0, 4).collect())
   }
 
+  test("diffVersions: a table's own __w/__n columns diff like any other") {
+    val cat = freshCatalog()
+    cat.write("t", Seq((1L, 1L), (1L, 2L)).toDF("__w", "__n"))
+    cat.write("t", Seq((1L, 1L), (2L, 2L)).toDF("__w", "__n"))
+    val got = rows(cat.diffVersions("t", 0, 1).orderBy("change", "__w"))
+    assert(got == Seq(Seq(2L, 2L, "added"), Seq(1L, 2L, "removed")))
+  }
+
   test("missing table read fails clearly") {
     val cat = freshCatalog()
     val e = intercept[IllegalArgumentException](cat.read("ghost"))

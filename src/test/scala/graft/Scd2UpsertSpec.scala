@@ -86,6 +86,24 @@ class Scd2UpsertSpec extends SparkSpec {
     assert(dim2.count() == 6) // 4 originals + 2 new versions
   }
 
+  test("opt-in change detection is exact: shifted text, '' vs NULL and a moved NULL are changes") {
+    // each version a local relation of its own, so the two share no lineage
+    def set(edits: (Int, String, String)*) = {
+      val df = edits.foldLeft(src("customers.csv")) { case (d, (id, c, v)) =>
+        d.withColumn(c, when(col("customerid") === id, lit(v)).otherwise(col(c)))
+      }
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+    }
+    val v1 = set((2, "email", ""), (3, "city", null))
+    val v2 = set((1, "firstname", "AdaL"), (1, "lastname", "ovelace"), (2, "email", null),
+      (3, "city", "BK"), (3, "state", null))
+    val dim1 = Scd2Upsert.initialLoad(v1, spec, d1)
+    val dim2 = Scd2Upsert.runChangedOnly(v2, dim1, spec, d2)
+    val newRows = dim2.filter(col("startdate") === lit(d2))
+    assert(rows(newRows.select("customerid")).flatten.toSet == Set(1, 2, 3))
+    assert(dim2.count() == 7) // 4 originals + 3 new versions; key 4 unchanged
+  }
+
   test("scalableKeys routes the close-out join off the broadcast path") {
     val dim1 = Scd2Upsert.initialLoad(src("customers.csv"), spec, d1)
     def closeOutPlan(s: graft.model.Scd2Spec) = {
